@@ -881,15 +881,16 @@ class Pipe:
             # this persist; measured r8).
             pdf = local_out.get("pdf")
             # FUSED driver-local small-batch path: evaluate the diff ONCE
-            # (a batch-bounded collect), split driver-side, and hand the
-            # write stages LocalRelations. The default path below pays the
+            # (a batch-bounded toArrow), split driver-side, write the
+            # unseen rows as driver-side parquet files and hand the merge
+            # a LocalRelation patch. The default path below pays the
             # diff evaluation inside the append action AND — because the
             # post-append refreshByPath invalidates the persisted diff —
             # AGAIN inside the merge; a 1-row late correction then scans
             # the backtrack window twice plus two broadcast builds. Fusing
             # trades those re-evaluations for one collect whose size the
-            # cap bounds (the diff output is at most the batch), skips the
-            # append action entirely on pure-update batches, and computes
+            # cap bounds (the diff output is at most the batch), runs no
+            # Spark write job for the unseen rows, and computes
             # every Observation metric in plain Python. (The r8
             # LocalRelation-merge-patch experiment that measured WORSE kept
             # the append's in-action diff evaluation — the collect was
@@ -916,8 +917,6 @@ class Pipe:
             if fused:
                 m, update, deduped = self._fused_local_diff(
                     marked, ru_confs, new_files)
-                n_update = int(m["n_update"])
-                n_unseen = int(m["n_total"]) - n_update
                 if (deferred_bounds and m.get("_lo") is not None
                         and not m.get("_dt_nulls")):
                     b_lo, b_hi = self._slop_window(m["_lo"], m["_hi"])
@@ -1009,8 +1008,9 @@ class Pipe:
             return self._finish_diff_sync(m, update, bounds, ru_confs,
                                           new_files)
 
-    def _finish_diff_sync(self, m: dict, update: DataFrame, bounds: dict,
-                          ru_confs: list, new_files: list | None,
+    def _finish_diff_sync(self, m: dict, update: DataFrame | None,
+                          bounds: dict, ru_confs: list,
+                          new_files: list | None,
                           update_deduped: bool = False,
                           ) -> "SyncResult":
         """Shared diff-sync tail (fused-local and observed paths): bounded
@@ -1021,14 +1021,15 @@ class Pipe:
         ``update_deduped=True`` (fused-local path) means the patch is
         already key-unique AND free of ORD_COL — the window dedupe is
         skipped, so the merge plan never re-evaluates the patch through
-        a shuffle."""
+        a shuffle. ``update`` may be None when ``n_update`` is 0."""
         n_update = int(m["n_update"])
         n_unseen = int(m["n_total"]) - n_update
-        merge_keys = ([c for c in self.index_cols
-                       if c in update.columns]
-                      or [c for c in update.columns if c != ORD_COL])
+        merge_keys = list(self.index_cols)
         with self._write_lock:
             if n_update:
+                merge_keys = ([c for c in self.index_cols
+                               if c in update.columns]
+                              or [c for c in update.columns if c != ORD_COL])
                 # merge AFTER append: store.merge re-lists files, so rows
                 # the append just wrote are retained through the rewrite
                 # pass the diff's time bounds so the merge prunes the
@@ -1134,22 +1135,26 @@ class Pipe:
         )
 
     #: driver-local batches at or below this row count take the fused
-    #: diff path (one collect evaluates the diff; LocalRelation writes).
-    #: The collect moves at most this many diff rows — comfortably under
-    #: the ≤250-key pushdown collect's own payload class — while larger
-    #: local batches keep the in-action Observation path whose write job
-    #: materializes the batch without a driver round-trip.
+    #: diff path (one ``toArrow`` evaluates the diff; the unseen rows
+    #: are written driver-side as one parquet file per cell, the update
+    #: patch is a LocalRelation). The Arrow table holds at most this
+    #: many diff rows — comfortably under the ≤250-key pushdown
+    #: collect's own payload class — while larger local batches keep
+    #: the in-action Observation path whose write job materializes the
+    #: batch without a driver round-trip.
     _LOCAL_FUSED_ROWS = 8192
 
     def _fused_local_diff(self, marked: DataFrame, ru_confs: list,
                           new_files: list | None,
-                          ) -> tuple[dict, DataFrame, bool]:
-        """Evaluate a driver-local small batch's diff ONCE: collect the
+                          ) -> tuple[dict, DataFrame | None, bool]:
+        """Evaluate a driver-local small batch's diff ONCE: ``toArrow`` the
         ``marked`` frame (bounded by ``_LOCAL_FUSED_ROWS`` — the diff
-        output is at most the batch), split driver-side, append the
-        unseen rows as a LocalRelation, and return the Observation-shaped
-        metrics, the update patch as a single-slice LocalRelation, and
-        whether the patch is already key-deduped (ORD_COL-free).
+        output is at most the batch), split it driver-side, hand the
+        unseen slice to ``store.append`` as a ``pyarrow.Table`` tagged
+        with the exact ``_mrsm_part`` cell Spark computed, and return the
+        Observation-shaped metrics, the update patch as a single-slice
+        LocalRelation (None when no row matched), and whether the patch
+        is already key-deduped (ORD_COL-free).
 
         What this buys on the reference's dominant dict/list small-batch
         cadence: the default path evaluates the diff inside the append's
@@ -1157,14 +1162,22 @@ class Pipe:
         ``refreshByPath`` invalidates the persisted diff), so a 1-row
         late correction scans the pruned backtrack window twice and
         builds two broadcasts. Here the window is scanned exactly once;
-        a pure-update batch skips the append action entirely; and the
-        LocalRelation patch frees the merge's probe side from any
-        lineage back through the diff. Collect + append run under ONE
-        write-lock hold, so the view the diff saw cannot be invalidated
-        by a concurrent writer between decision and write (the observed
-        path gets the same guarantee from evaluating the diff inside the
-        locked append job)."""
+        the append is a driver-side parquet write per cell instead of a
+        Spark write job (shuffle, tasks, commit protocol) for rows the
+        driver already holds; a pure-update batch skips the append
+        entirely; and the LocalRelation patch frees the merge's probe
+        side from any lineage back through the diff. The table comes
+        from ``toArrow``, not ``collect``: collected ``Row`` timestamps
+        are naive process-local time, Arrow's are UTC instants. toArrow
+        + append run under ONE write-lock hold, so the view the diff saw
+        cannot be invalidated by a concurrent writer between decision
+        and write (the observed path gets the same guarantee from
+        evaluating the diff inside the locked append job)."""
+        import pyarrow.compute as pc
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
         from pyspark.sql.types import StructType
+
+        from meerschaum_spark.store import PART_COL
 
         dtc = self.dt_col
         has_dt = dtc is not None and dtc in marked.columns
@@ -1173,57 +1186,55 @@ class Pipe:
             # store.part_expr — same exact-int64 cell expression as
             # store.with_part and the observed path's _ucells aggregate
             # (float floor(epoch/width) diverges past 2^53 µs)
-            sel.append(self.store.part_expr().alias("_m_cell"))
-        for ru_i, ru_conf in enumerate(ru_confs):
-            sel.append(self._rollup_bucket_us(ru_conf)
-                       .alias(f"_m_rub{ru_i}"))
+            sel.append(self.store.part_expr().alias(PART_COL))
+        rub_cols = [f"_m_rub{i}" for i in range(len(ru_confs))]
+        for ru_conf, name in zip(ru_confs, rub_cols):
+            sel.append(self._rollup_bucket_us(ru_conf).alias(name))
+
+        def _sorted_set(col) -> list:
+            return sorted(pc.unique(col.drop_null()).to_pylist())
+
+        def _lo_hi(col) -> tuple:
+            mm = pc.min_max(col)
+            return mm["min"].as_py(), mm["max"].as_py()
+
+        diff = marked.select(*sel)
         with self._write_lock:
-            rows = marked.select(*sel).collect()
-            upd = [r for r in rows if r[HIT_COL] is not None]
-            m: dict = {"n_total": len(rows), "n_update": len(upd)}
+            tbl = diff.toArrow()
+            hit = tbl.column(HIT_COL).is_valid()
+            upd = tbl.filter(hit)
+            m: dict = {"n_total": tbl.num_rows, "n_update": upd.num_rows}
             if has_dt:
-                dts = [r[dtc] for r in rows if r[dtc] is not None]
-                m["_lo"] = min(dts) if dts else None
-                m["_hi"] = max(dts) if dts else None
-                m["_dt_nulls"] = len(rows) - len(dts)
-                udts = [r[dtc] for r in upd if r[dtc] is not None]
-                m["_ulo"] = min(udts) if udts else None
-                m["_uhi"] = max(udts) if udts else None
-                cells = sorted({r["_m_cell"] for r in upd
-                                if r["_m_cell"] is not None})
-                m["_ucells"] = cells[:self._MERGE_CELLS_CAP + 1]
-            for ru_i in range(len(ru_confs)):
-                ubs = sorted({r[f"_m_rub{ru_i}"] for r in upd
-                              if r[f"_m_rub{ru_i}"] is not None})
-                m[f"_ru_ub{ru_i}"] = ubs[:self._ROLLUP_UB_CAP + 1]
-            u_cols = [c for c in marked.columns
-                      if c not in (HIT_COL, ORD_COL)]
-            u_schema = StructType([f for f in marked.schema.fields
-                                   if f.name in u_cols])
-            u_rows = [[r[c] for c in u_cols]
-                      for r in rows if r[HIT_COL] is None]
-            if u_rows:
-                # single-slice LocalRelation (mdf.local_df): a plain
-                # createDataFrame spreads even a 1-row append over
-                # defaultParallelism slices — a 32-task python-RDD scan
-                # stage inside the write job (measured: the dominant
-                # stages of a 1-row sync's write job)
+                m["_lo"], m["_hi"] = _lo_hi(tbl.column(dtc))
+                m["_dt_nulls"] = tbl.column(dtc).null_count
+                m["_ulo"], m["_uhi"] = _lo_hi(upd.column(dtc))
+                m["_ucells"] = _sorted_set(
+                    upd.column(PART_COL))[:self._MERGE_CELLS_CAP + 1]
+            for ru_i, name in enumerate(rub_cols):
+                m[f"_ru_ub{ru_i}"] = _sorted_set(
+                    upd.column(name))[:self._ROLLUP_UB_CAP + 1]
+            if upd.num_rows < tbl.num_rows:
                 self.store.append(
-                    mdf.local_df(self.spark, u_rows, u_schema),
+                    tbl.filter(pc.invert(hit)).drop_columns(
+                        [HIT_COL, ORD_COL, *rub_cols]),
                     new_files=new_files)
+        if not upd.num_rows:
+            return m, None, True
         # Patch dedupe runs HERE, in Python (keep the max-ORD row per
         # null-safe key group — exactly _dedupe_patch's window): the
         # merge plan references its patch twice (anti-join + union), so
         # a window-deduped LocalRelation re-evaluated per reference cost
         # two shuffle stages and two 32-slice python scans per sync.
         # A pre-deduped single-slice LocalRelation makes each reference
-        # a 1-task scan with no window anywhere in the merge job.
+        # a 1-task scan with no window anywhere in the merge job. The
+        # rows convert exactly as ``collect`` would have returned them.
+        rows = ArrowTableToRowsConversion.convert(upd, diff.schema)
         p_cols = [c for c in marked.columns if c != HIT_COL]
         p_schema = StructType([f for f in marked.schema.fields
                                if f.name != HIT_COL])
         keys = [c for c in self.index_cols if c in p_cols] \
             or [c for c in p_cols if c != ORD_COL]
-        deduped = _dedupe_rows_local(upd, keys)
+        deduped = _dedupe_rows_local(rows, keys)
         if deduped is not None:
             out_cols = [c for c in p_cols if c != ORD_COL]
             out_schema = StructType([f for f in p_schema.fields
@@ -1234,7 +1245,7 @@ class Pipe:
             return m, update, True
         # unsupported key type (map-typed column): keep the window path
         update = mdf.local_df(
-            self.spark, [[r[c] for c in p_cols] for r in upd], p_schema)
+            self.spark, [[r[c] for c in p_cols] for r in rows], p_schema)
         return m, update, False
 
     def filter_existing(

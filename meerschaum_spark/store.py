@@ -37,7 +37,7 @@ import re
 import shutil
 import time
 import uuid
-from typing import Any, Iterable
+from typing import TYPE_CHECKING, Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +47,9 @@ from meerschaum_spark.chunks import DEFAULT_CHUNK_MINUTES
 from meerschaum_spark.dtypes import UNIT_US, normalize_unit, to_spark_type
 from meerschaum_spark.locking import ProcessLock, process_lock
 from meerschaum_spark.params import sql_in_condition
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 EXISTS_TTL_SECONDS = 60.0  # reference config/_default.py:244-258
 PART_COL = "_mrsm_part"
@@ -396,17 +399,38 @@ class ParquetPipeStore:
                     out.add(f.path)
         return out
 
-    def append(self, df: DataFrame,
+    def append(self, df: "DataFrame | pa.Table",
                new_files: list | None = None) -> None:
         """File-add append of rows known to be unseen (no rewrite).
 
         Pass ``new_files=[]`` to receive the file paths this append
-        created (a before/after listing pair) — the written-rows set AS
-        FILES, which rollup delta maintenance aggregates instead of
-        rescanning base-table buckets. Callers opt in because the two
-        listings are API round-trips on object storage."""
+        created — the written-rows set AS FILES, which rollup delta
+        maintenance aggregates instead of rescanning base-table buckets.
+        For a DataFrame that costs a before/after listing pair (API
+        round-trips on object storage), so callers opt in.
+
+        A ``pyarrow.Table`` (rows the driver already holds — the fused
+        small-batch sync's unseen slice) skips the Spark write job: each
+        cell's rows go to ONE snappy parquet file written driver-side
+        (``_write_arrow_cells``). The table carries ``PART_COL`` with
+        each row's cell as ``part_expr`` computed it (null → the null
+        cell); without it every row goes to cell 0, as ``with_part``
+        does for a frame without the dt column. Crash window: each cell
+        file is published by one rename of a dot-named temp file that no
+        reader lists, so a killed writer leaves whole files or nothing
+        per cell — but a multi-cell batch killed between two renames
+        leaves its earlier cells visible. That is the same partial-batch
+        gap as the v2 committer's (see ``session.ENGINE_CONFS``), healed
+        the same way: a retry of the batch diffs the landed rows out."""
         with self.lock:
             self._maybe_recover()
+            if not isinstance(df, DataFrame):
+                written = self._write_arrow_cells(df)
+                if new_files is not None:
+                    new_files.extend(written)
+                self._post_write_exists(df.num_rows)
+                self._refresh_listing()
+                return
             before = self._data_files() if new_files is not None else None
             observed, n_written = self._observe_rows(df)
             out = self._rebalanced(self.with_part(observed))
@@ -416,6 +440,58 @@ class ParquetPipeStore:
                 new_files.extend(sorted(self._data_files() - before))
             self._post_write_exists(n_written())
             self._refresh_listing()
+
+    def _write_arrow_cells(self, table: "pa.Table") -> list[str]:
+        """Write an Arrow table as one parquet file per partition cell and
+        return the published paths, in the format Spark writes under
+        ``ENGINE_CONFS``: snappy, INT64-micros timestamps (tz-aware →
+        isAdjustedToUTC, naive → NTZ), every column optional, min/max
+        statistics. Decimals are stored as fixed-length byte arrays,
+        Spark's own encoding above precision 18, which it reads at every
+        precision. Each file is written under a hidden temp name
+        (leading ``.``, no ``.parquet`` suffix: Spark's file index skips
+        dot-files and the footer readers select by suffix) and published
+        by one ``os.replace``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        cells = None
+        if PART_COL in table.column_names:
+            cells = table.column(PART_COL)
+            table = table.drop_columns([PART_COL])
+        table = table.cast(pa.schema([f.with_nullable(True)
+                                      for f in table.schema]))
+        if cells is None:
+            groups = [(0, table)]
+        else:
+            groups = [(c, table.filter(pc.is_null(cells) if c is None
+                                       else pc.equal(cells, c)))
+                      for c in pc.unique(cells).to_pylist()]
+        crash = os.environ.get("MRSM_TEST_CRASH_APPEND")
+        written: list[str] = []
+        tmp = None
+        try:
+            for i, (cell, rows) in enumerate(groups):
+                cell_dir = os.path.join(self.data_path,
+                                        self._part_dir_name(cell))
+                os.makedirs(cell_dir, exist_ok=True)
+                name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+                tmp = os.path.join(cell_dir, f".{name}.tmp")
+                pq.write_table(rows, tmp, compression="snappy",
+                               store_schema=False)
+                if crash == "after_temp_write":
+                    os._exit(137)  # test-only: die before the publish
+                path = os.path.join(cell_dir, name)
+                os.replace(tmp, path)
+                tmp = None
+                written.append(path)
+                if crash == "after_first_publish" and i == 0:
+                    os._exit(137)  # test-only: die between two publishes
+        finally:
+            if tmp is not None and os.path.exists(tmp):
+                os.remove(tmp)
+        return written
 
     def _rebalanced(self, df: DataFrame) -> DataFrame:
         """REBALANCE(_mrsm_part) before a partitioned write: AQE coalesces

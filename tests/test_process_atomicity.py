@@ -13,7 +13,12 @@ subprocesses, each with its own JVM, against one shared instance dir:
   present, and the next reader must roll the swap FORWARD to the exact
   committed state;
 * ``ProcessLock`` semantics across processes (blocking exclusion,
-  non-blocking failure) and re-entrancy within one.
+  non-blocking failure) and re-entrancy within one;
+* a fused small-batch sync killed inside its driver-side Arrow append
+  (``MRSM_TEST_CRASH_APPEND``) — an unpublished temp file stays
+  invisible and a retry of the batch lands every row exactly once;
+* fused syncs in a process whose local time zone is not UTC store
+  every input instant unchanged.
 
 Reference parity: connectors/sql/_pipes.py:2217-2809 gets this from the
 database transaction; the Parquet store now gets it from flock + a
@@ -267,3 +272,151 @@ def test_drop_reaps_lockfile_and_lock_still_works(spark, tmp_path):
     store.append(df)  # store usable again
     assert store.read().count() == 1
     store.drop()
+
+
+#: engine sessions (``get_spark``) for the subprocess tests below
+SMALL_SPARK = {"SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+
+#: fused small-batch sync killed inside its driver-side Arrow append
+#: (``MRSM_TEST_CRASH_APPEND``: ``after_temp_write`` dies before the
+#: first publish rename, ``after_first_publish`` between two cells')
+APPEND_CRASHER = textwrap.dedent("""
+    import os, sys
+    sys.path.insert(0, {repo!r})
+    inst, mode = sys.argv[1], sys.argv[2]
+    from meerschaum_spark.session import get_spark
+    spark = get_spark("append_crasher")
+    from meerschaum_spark import Pipe
+    from tests.test_process_atomicity import append_batches
+    pipe = Pipe("t", "arrow", instance=inst, spark=spark,
+                columns={{"datetime": "ts", "id": "k"}})
+    seed, batch = append_batches()
+    assert pipe.sync(seed).success
+    os.environ["MRSM_TEST_CRASH_APPEND"] = mode
+    pipe.sync(batch)
+    print("CRASHER_SURVIVED")  # must be unreachable
+""")
+
+
+def append_batches() -> tuple[list, list]:
+    """(seed, batch): 30 seed rows in one 30-day cell, then 20 new rows
+    split over two later cells — a small list batch, so the sync takes
+    the fused route and appends through the Arrow writer."""
+    import datetime as dt
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    seed = [{"ts": base + dt.timedelta(minutes=i), "k": i, "v": 0}
+            for i in range(30)]
+    batch = [{"ts": base + dt.timedelta(days=45 + 35 * (i % 2), minutes=i),
+              "k": 100 + i, "v": 1} for i in range(20)]
+    return seed, batch
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("mode", ["after_temp_write", "after_first_publish"])
+def test_killed_arrow_append_heals_on_retry(spark, instance_dir, mode):
+    """A fused sync SIGKILL'd inside its Arrow append: an unpublished
+    temp file is invisible to every reader, a published cell's rows are
+    visible (the documented multi-cell crash window), and re-syncing the
+    same batch lands every row exactly once."""
+    from meerschaum_spark import Pipe
+
+    crash = _run(APPEND_CRASHER, instance_dir, mode, env=SMALL_SPARK)
+    assert crash.returncode == 137, (
+        f"crash hook did not fire (rc={crash.returncode}):\n"
+        f"{crash.stdout}\n{crash.stderr[-3000:]}")
+    seed, batch = append_batches()
+    pipe = Pipe("t", "arrow", instance=instance_dir, spark=spark,
+                columns={"datetime": "ts", "id": "k"})
+    data = pipe.store.data_path
+    temps = glob.glob(os.path.join(data, "*", ".*.tmp"))
+    published = set(glob.glob(os.path.join(data, "*", "*.parquet")))
+    assert pipe.store._data_files() == published
+    if mode == "after_temp_write":
+        assert len(temps) == 1
+        landed = 0
+    else:
+        assert temps == []
+        landed = 10  # the first cell's rows
+    seed_max = max(r["ts"] for r in seed)
+    assert pipe.get_data(order=None).count() == 30 + landed
+    assert pipe.get_rowcount() == 30 + landed
+    if not landed:
+        assert pipe.get_sync_time() == seed_max
+    else:
+        assert pipe.get_sync_time() > seed_max
+
+    res = pipe.sync(batch)
+    assert res.success and (res.inserted, res.updated) == (20 - landed, 0)
+    assert pipe.get_rowcount() == 50
+    got = _table_rows(instance_dir)
+    assert got == {**{r["k"]: 0 for r in seed}, **{r["k"]: 1 for r in batch}}
+    assert pipe.get_sync_time() == max(r["ts"] for r in batch)
+
+
+#: fused syncs in a process whose local time zone is not UTC; prints the
+#: stored (k, epoch µs, v) rows read straight from the parquet files
+TZ_SYNCER = textwrap.dedent("""
+    import json, os, sys, time
+    sys.path.insert(0, {repo!r})
+    assert time.strftime("%Z") in ("EST", "EDT"), time.strftime("%Z")
+    inst = sys.argv[1]
+    from meerschaum_spark.session import get_spark
+    spark = get_spark("tz_syncer")
+    import pyarrow.parquet as pq
+    from meerschaum_spark import Pipe
+    from tests.test_process_atomicity import tz_batches
+    pipe = Pipe("t", "tz", instance=inst, spark=spark,
+                columns={{"datetime": "ts", "id": "k"}})
+    for b in tz_batches():
+        res = pipe.sync(b)
+        assert res.success, res.message
+        print("SYNC", res.inserted, res.updated)
+    out = []
+    for f in sorted(pipe.store._data_files()):
+        t = pq.read_table(f)
+        assert t.schema.field("ts").type.tz == "UTC", t.schema
+        out += [list(r) for r in zip(t.column("k").to_pylist(),
+                                     t.column("ts").cast("int64").to_pylist(),
+                                     t.column("v").to_pylist())]
+    print("ROWS", json.dumps(sorted(out)))
+""")
+
+
+def tz_batches() -> list:
+    """Three pandas batches around the 2024-03-10 US DST switch: a first
+    sync (Spark write), new rows (fused route, Arrow append), then one
+    late correction of a stored row plus one new row (fused route,
+    merge + Arrow append)."""
+    import datetime as dt
+
+    import pandas as pd
+    base = dt.datetime(2024, 3, 9, 22, tzinfo=dt.timezone.utc)
+
+    def frame(keys, v):
+        return pd.DataFrame({
+            "ts": [base + dt.timedelta(hours=k, microseconds=k)
+                   for k in keys],
+            "k": list(keys), "v": [v] * len(keys)})
+    return [frame(range(0, 10), 0), frame(range(10, 20), 1),
+            frame([5, 20], 2)]
+
+
+@pytest.mark.slow
+def test_fused_sync_keeps_epochs_under_local_timezone(instance_dir):
+    """Collected ``Row`` timestamps are naive process-local time; the
+    fused route reads the diff through Arrow, so a process whose local
+    zone is America/New_York stores every input instant unchanged and
+    its late correction replaces the stored row (no duplicate key)."""
+    out = _run(TZ_SYNCER, instance_dir,
+               env={**SMALL_SPARK, "TZ": "America/New_York"})
+    assert out.returncode == 0, f"{out.stdout}\n{out.stderr[-3000:]}"
+    assert [ln for ln in out.stdout.splitlines()
+            if ln.startswith("SYNC")] == [
+        "SYNC 10 0", "SYNC 10 0", "SYNC 1 1"]
+    stored = json.loads(next(ln for ln in out.stdout.splitlines()
+                             if ln.startswith("ROWS "))[5:])
+    expected = {}
+    for b in tz_batches():
+        for ts, k, v in zip(b["ts"], b["k"], b["v"]):
+            expected[int(k)] = [int(k), ts.value // 1000, int(v)]
+    assert stored == sorted(expected.values())

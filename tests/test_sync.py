@@ -3,6 +3,8 @@ tests/test_sync.py (drop-and-sync trio :45-102, upsert :780+, null indices
 :729, dedup, clear)."""
 
 import datetime
+import decimal
+import os
 
 import pandas as pd
 import pytest
@@ -915,7 +917,8 @@ def test_fused_local_small_batch_path(spark, instance_dir):
     ones, (b) the job budget of a single-row update sync (collect +
     merge — the pre-r9 path paid an append-side diff evaluation plus a
     merge-side re-evaluation), (c) mixed unseen+update correctness in
-    one local batch."""
+    one local batch, (d) the job budget of an insert-only tick: at most
+    2 jobs and no Spark parquet write (the driver writes the new rows)."""
     from meerschaum_spark.pipe import Pipe as _P
 
     calls = {"n": 0}
@@ -957,13 +960,282 @@ def test_fused_local_small_batch_path(spark, instance_dir):
         assert calls["n"] == 2
         assert n_jobs <= 3, f"fused single-row update ran {n_jobs} jobs"
 
+        # job budget: an insert-only tick = the diff toArrow + its
+        # broadcast build; the unseen rows are written driver-side, so
+        # no Spark parquet write runs at all
+        from pyspark.sql.readwriter import DataFrameWriter
+        writes = []
+        orig_parquet = DataFrameWriter.parquet
+
+        def spy_parquet(self, path, *a, **k):
+            writes.append(path)
+            return orig_parquet(self, path, *a, **k)
+
+        DataFrameWriter.parquet = spy_parquet
+        try:
+            sc.setJobGroup("fused_insert", "insert-only tick")
+            r_ins = pipe.sync([{"dt": dtm(2024, 1, 21), "id": 100,
+                                "val": 1.0},
+                               {"dt": dtm(2024, 1, 22), "id": 101,
+                                "val": 2.0}])
+            n_ins_jobs = len(
+                sc.statusTracker().getJobIdsForGroup("fused_insert"))
+            sc.setJobGroup("fused_done", "")
+        finally:
+            DataFrameWriter.parquet = orig_parquet
+        assert (r_ins.inserted, r_ins.updated) == (2, 0)
+        assert calls["n"] == 3
+        assert writes == [], f"insert-only fused sync wrote via Spark: {writes}"
+        assert n_ins_jobs <= 2, f"fused insert-only tick ran {n_ins_jobs} jobs"
+        assert pipe.get_rowcount() == 13
+
         # distributed batches must NOT take the fused path
         src = spark.createDataFrame(
             [(dtm(2024, 2, 1), 200, 1.0)], "dt timestamp, id long, val double")
         r3 = pipe.sync(src)
-        assert calls["n"] == 2 and r3.inserted == 1
+        assert calls["n"] == 3 and r3.inserted == 1
     finally:
         _P._fused_local_diff = orig
+
+
+#: one column per stored type the fused route's Arrow writer must keep
+#: exactly as Spark's own write does
+MATRIX_DTYPES = {
+    "dt": "datetime", "id": "int64", "i8": "int8", "i16": "int16",
+    "i32": "int32", "i64": "int64", "f32": "float32", "f64": "float64",
+    "b": "bool", "s": "str", "d": "date", "by": "bytes",
+    "num": "numeric(12,3)", "arr": "array(float32)",
+}
+
+
+def _matrix_rows(id0, n, t0, with_dt=True):
+    nan = float("nan")
+    rows = []
+    for j in range(n):
+        i = id0 + j
+        row = {
+            "id": i, "i8": (i % 200) - 100, "i16": -30000 + i,
+            "i32": 2**31 - 1 - i, "i64": 2**62 + i,
+            "f32": [1.5, nan, -0.0, 3.25][j % 4],
+            "f64": [nan, -0.0, 1e300, -2.5][j % 4],
+            "b": j % 2 == 0, "s": f"s{i}-\u00e9",
+            "d": datetime.date(2024, 1, 1) + datetime.timedelta(days=i),
+            "by": bytes([i % 256, 0, 255]),
+            "num": decimal.Decimal(f"{i}.125"),
+            "arr": [float(i), -0.0, 0.5],
+        }
+        if j == 1:
+            for c in ("b", "s", "d", "by", "num", "arr"):
+                row[c] = None
+        if with_dt:
+            # 9-day steps: the batch spans several 30-day cells
+            row["dt"] = t0 + datetime.timedelta(days=9 * j, microseconds=j)
+        rows.append(row)
+    if with_dt:
+        rows[-1]["dt"] = None  # -> the null partition cell
+    return rows
+
+
+def _norm(v):
+    """Comparable form of a collected value: floats by repr (NaN equal to
+    NaN, -0.0 distinct from 0.0), binaries as bytes, lists by element."""
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    if isinstance(v, list):
+        return [_norm(x) for x in v]
+    return v
+
+
+def _table(pipe):
+    return sorted(([_norm(r[c]) for c in sorted(r.asDict())]
+                   for r in pipe.get_data(order=None).collect()),
+                  key=lambda r: repr(r))
+
+
+@pytest.mark.parametrize("with_dt", [True, False],
+                         ids=["dt_cells", "no_dt_cell0"])
+def test_fused_arrow_append_dtype_matrix(spark, instance_dir, with_dt):
+    """The fused route writes its unseen rows with pyarrow, not Spark.
+    Every stored type must read back exactly as from a twin pipe whose
+    same batch took the distributed route (a Spark write job), through
+    get_data and the footer paths (sync time, row count); the written
+    files must keep Spark's format: snappy, INT64 µs timestamps adjusted
+    to UTC, min/max statistics on the dt column."""
+    import pyarrow.parquet as pq
+
+    from meerschaum_spark import dataframe as mdf
+    from meerschaum_spark.pipe import Pipe as _P
+    from meerschaum_spark.store import NULL_PART_DIR, PART_COL
+
+    dtypes = dict(MATRIX_DTYPES)
+    columns = {"id": "id"}
+    if with_dt:
+        columns["datetime"] = "dt"
+    else:
+        dtypes.pop("dt")
+    t0 = datetime.datetime(2024, 1, 3, 4, 5, 6, tzinfo=UTC)
+    pipes = [Pipe("mx", f"{name}_{with_dt}", instance=instance_dir,
+                  spark=spark, columns=columns, dtypes=dtypes)
+             for name in ("fused", "twin")]
+    seed = _matrix_rows(0, 3, t0, with_dt)
+    for p in pipes:
+        assert p.sync(seed).success
+
+    calls = {"n": 0}
+    orig = _P._fused_local_diff
+
+    def spy(self, *a, **k):
+        calls["n"] += 1
+        return orig(self, *a, **k)
+
+    fused, twin = pipes
+    before = fused.store._data_files()
+    new = _matrix_rows(100, 9, t0 + datetime.timedelta(days=1), with_dt)
+    _P._fused_local_diff = spy
+    try:
+        r_f = fused.sync(new)
+        assert calls["n"] == 1
+        sdf, _ = mdf.to_spark_df(spark, new, dtypes)
+        r_t = twin.sync(sdf)
+        assert calls["n"] == 1  # the twin took the distributed route
+    finally:
+        _P._fused_local_diff = orig
+    assert (r_f.inserted, r_f.updated) == (r_t.inserted, r_t.updated) \
+        == (9, 0)
+
+    assert _table(fused) == _table(twin)
+    assert fused.get_rowcount() == twin.get_rowcount() == 12
+    assert fused.get_sync_time() == twin.get_sync_time()
+    if with_dt:
+        assert fused.get_sync_time() is not None
+        lo = t0 + datetime.timedelta(days=10)
+        hi = t0 + datetime.timedelta(days=50)
+        assert (fused.get_rowcount(begin=lo, end=hi)
+                == twin.get_rowcount(begin=lo, end=hi) > 0)
+
+    written = sorted(fused.store._data_files() - before)
+    cells = {os.path.basename(os.path.dirname(f)) for f in written}
+    if with_dt:
+        assert len(cells) > 2 and NULL_PART_DIR in cells
+    else:
+        assert cells == {f"{PART_COL}=0"}
+    assert len(written) == len(cells)  # one file per cell
+    for f in written:
+        assert os.path.basename(f).endswith(".snappy.parquet")
+        meta = pq.ParquetFile(f).metadata
+        assert PART_COL not in meta.schema.names
+        rg = meta.row_group(0)
+        for k in range(rg.num_columns):
+            col = rg.column(k)
+            assert col.compression == "SNAPPY"
+            assert meta.schema.column(k).max_definition_level >= 1
+            if col.path_in_schema == "dt":
+                assert col.physical_type == "INT64"
+                lt = str(meta.schema.column(k).logical_type)
+                assert "isAdjustedToUTC=true" in lt
+                assert "microseconds" in lt
+                st = col.statistics
+                assert st is not None
+                assert st.has_min_max == (col.num_values > st.null_count)
+    # nothing left behind under a temp name
+    leftovers = [n for _, _, names in os.walk(fused.store.data_path)
+                 for n in names if n.endswith(".tmp")]
+    assert leftovers == []
+
+
+def test_arrow_cell_writer_keeps_timestamp_kinds(tmp_path):
+    """The driver-side writer alone (no Spark): one file per cell, null
+    cells in the hive null directory, a UTC-aware timestamp stored as
+    isAdjustedToUTC=true and a naive one as NTZ (false), as Spark writes
+    TimestampType and TimestampNTZType."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from meerschaum_spark.store import (NULL_PART_DIR, PART_COL,
+                                        ParquetPipeStore)
+
+    store = ParquetPipeStore(None, str(tmp_path), "t", dt_col="ts")
+    ts = [datetime.datetime(2024, 1, 1, h) for h in range(3)]
+    table = pa.table({
+        "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        "ntz": pa.array(ts, pa.timestamp("us")),
+        PART_COL: pa.array([5, 5, None], pa.int64()),
+    })
+    written = store._write_arrow_cells(table)
+    assert sorted(os.path.basename(os.path.dirname(f)) for f in written) \
+        == sorted([f"{PART_COL}=5", NULL_PART_DIR])
+    assert set(written) == store._data_files()
+    for f in written:
+        schema = pq.ParquetFile(f).schema
+        kinds = {schema.column(i).name: str(schema.column(i).logical_type)
+                 for i in range(len(schema.names))}
+        assert "isAdjustedToUTC=true" in kinds["ts"]
+        assert "isAdjustedToUTC=false" in kinds["ntz"]
+        assert PART_COL not in kinds
+    assert [n for n in os.listdir(os.path.dirname(written[0]))
+            if n.startswith(".")] == []
+
+
+def test_fused_insert_rollup_delta_reads_arrow_files(spark, instance_dir,
+                                                     monkeypatch):
+    """Rollup delta maintenance folds exactly the files the Arrow append
+    returned as ``new_files`` (no recompute fallback), and the rollup
+    still equals a rebuild from the base table."""
+    from meerschaum_spark.pipe import Pipe as _P
+
+    pipe = Pipe("roll", "arrow", instance=instance_dir, spark=spark,
+                columns={"datetime": "ts", "id": "id"},
+                parameters={"rollups": [{"name": "hourly",
+                                         "interval": "hour",
+                                         "groupby": ["g"],
+                                         "values": ["v"]}]})
+    t0 = datetime.datetime(2024, 3, 1, 10, 0, tzinfo=UTC)
+
+    def rows_of(df):
+        return sorted((r["ts"], r["g"], r["n_rows"], float(r["sum_v"]),
+                       r["min_v"], r["max_v"]) for r in df.collect())
+
+    def expected():
+        return rows_of(
+            pipe.get_data(order=None)
+            .groupBy(F.date_trunc("hour", "ts").alias("ts"), "g")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum(F.col("v").cast("decimal(18,6)"))
+                 .cast("decimal(28,6)").alias("sum_v"),
+                 F.min("v").alias("min_v"), F.max("v").alias("max_v")))
+
+    assert pipe.sync([{"ts": t0, "id": 1, "g": "a", "v": 3.0}]).success
+
+    folded, recomputed = [], []
+    orig_delta = _P._maintain_rollups_delta
+    orig_full = _P._maintain_rollups
+
+    def spy_delta(self, patch, *a, **k):
+        folded.append(None if patch is None else patch.inputFiles())
+        return orig_delta(self, patch, *a, **k)
+
+    def spy_full(self, *a, **k):
+        recomputed.append(a)
+        return orig_full(self, *a, **k)
+
+    monkeypatch.setattr(_P, "_maintain_rollups_delta", spy_delta)
+    monkeypatch.setattr(_P, "_maintain_rollups", spy_full)
+    before = pipe.store._data_files()
+    res = pipe.sync([
+        {"ts": t0 + datetime.timedelta(minutes=5), "id": 2, "g": "a",
+         "v": -9.0},
+        {"ts": t0 + datetime.timedelta(days=40), "id": 3, "g": "b",
+         "v": 1.25},
+    ])
+    assert (res.inserted, res.updated) == (2, 0)
+    written = pipe.store._data_files() - before
+    assert len(written) == 2  # two cells, one Arrow file each
+    assert recomputed == []
+    assert len(folded) == 1 and folded[0] is not None
+    assert {f.replace("file://", "") for f in folded[0]} == written
+    assert rows_of(pipe.get_rollup("hourly")) == expected()
 
 
 def test_dedupe_rows_local_matches_window_semantics():
